@@ -46,8 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructType
 
+from prox_spark.manifest import entry_path
 from prox_spark.table import (
-    _abs,
     _manifest_versions,
     _read_files,
     read_manifest,
@@ -97,7 +97,7 @@ def _version_changes(
             continue
         base = _read_files(spark, table_path, prev, targets)
         keys = (
-            spark.read.parquet(_abs(table_path, e["file"]))
+            spark.read.parquet(entry_path(table_path, e["file"]))
             .select(*e["keys"])
             .distinct()
         )

@@ -4088,7 +4088,8 @@ def _ds_table(spark: SparkSession, sf_dir: str) -> tuple:
         rename_column,
         split_files_by_key_ranges,
     )
-    from prox_spark.table_ds import ProxTableReader, manifest_py
+    from prox_spark.manifest import load_manifest
+    from prox_spark.table_ds import ProxTableReader
 
     from ._staging import staged
 
@@ -4117,7 +4118,7 @@ def _ds_table(spark: SparkSession, sf_dir: str) -> tuple:
 
         # prune pins: the DataSource's pushed-filter file list must
         # equal the JVM point-lookup prune on the same predicate
-        mm = manifest_py(t)
+        mm = load_manifest(t)
         rd = ProxTableReader({}, mm, t)
         full = rd.pruned_files()
         rd.pushFilters([EqualTo(("doc_id",), 3)])

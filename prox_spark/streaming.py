@@ -319,11 +319,11 @@ def drain_table_stream(
     single-batch fallback runs unpaced, see the reader docstring).
     Returns the number of starts it took; bounded by
     ``max_starts``."""
-    from prox_spark.table_stream import _list_versions
+    from prox_spark.manifest import list_versions
 
     starts = 0
     while True:
-        versions = _list_versions(table_path)
+        versions = list_versions(table_path)
         if not versions:
             return starts  # nothing committed yet: nothing to drain
         head = versions[-1]

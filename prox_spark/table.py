@@ -71,7 +71,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import threading
 import uuid
 
@@ -79,7 +78,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-MANIFEST_DIR = "_manifests"
+from prox_spark import manifest as mf
+from prox_spark.manifest import MANIFEST_DIR
+
 DATA_DIR = "data"
 
 # Chunked-manifest (v2) layout thresholds: beyond CHUNK_THRESHOLD live
@@ -91,7 +92,8 @@ DATA_DIR = "data"
 # per-commit metadata WRITE cost becomes O(touched files), not
 # O(live files), lifting the single-doc ceiling (~10^5 files) to the
 # chunk-count regime (~10^7 at the defaults). Tests shrink these to
-# exercise the layout on small tables.
+# exercise the layout on small tables; the format() writer
+# (table_ds.py) reads them from here too, so one setting governs both.
 CHUNK_THRESHOLD = 256
 CHUNK_SIZE = 256
 
@@ -128,41 +130,32 @@ def _fs(spark: SparkSession, path: str):
     return jvm, fs, hpath
 
 
-_BRANCH_NAME_RE = re.compile(r"^[A-Za-z0-9_-]+$")
+def _manifest_dir(spark: SparkSession, table_path: str) -> list[tuple]:
+    """(file name, Hadoop FileStatus) of every entry in the table's
+    manifest dir — the one place this module lists it (names and
+    versions are parsed by :mod:`prox_spark.manifest`)."""
+    jvm, fs, _ = _fs(spark, table_path)
+    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
+    if not fs.exists(mdir):
+        return []
+    return [(st.getPath().getName(), st) for st in fs.listStatus(mdir)]
 
 
-def _mprefix(ref: str) -> str:
-    """Manifest filename prefix for a ref. ``main`` is the published
-    table (the classic ``manifest-`` names every existing table
-    already has); any other name is a BRANCH whose manifests live in
-    the same ``_manifests`` dir under a prefix the main listing's
-    ``manifest-`` filter never matches — so branch commits are
-    invisible to every reader that didn't ask for the branch."""
-    if ref == "main":
-        return "manifest-"
-    if not _BRANCH_NAME_RE.match(ref):
-        raise ValueError(
-            f"invalid branch name {ref!r}: use [A-Za-z0-9_-]+ (and not 'main')"
-        )
-    return f"branch.{ref}."
+def _manifest_publish_times(
+    spark: SparkSession, table_path: str, ref: str = "main"
+) -> dict[int, float]:
+    """{version: publish time (epoch ms)} from the manifest files' own
+    modification times — the atomic renames that made each version
+    visible (the same clock :func:`version_at_timestamp` resolves
+    against, so age-based retention and TIMESTAMP AS OF agree)."""
+    listed = mf.versions_in(_manifest_dir(spark, table_path), ref)
+    return {v: float(st.getModificationTime()) for v, st in listed.items()}
 
 
 def _manifest_versions(
     spark: SparkSession, table_path: str, ref: str = "main"
 ) -> list[int]:
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return []
-    prefix = _mprefix(ref)
-    out = []
-    for st in fs.listStatus(mdir):
-        name = st.getPath().getName()
-        if name.startswith(prefix) and name.endswith(".json"):
-            v = name[len(prefix) : -len(".json")]
-            if v.isdigit():
-                out.append(int(v))
-    return sorted(out)
+    return sorted(mf.versions_in(_manifest_dir(spark, table_path), ref))
 
 
 def is_manifest_table(spark: SparkSession, table_path: str) -> bool:
@@ -184,14 +177,9 @@ def read_manifest(
     consumer sees the classic {files, stats, ...} shape regardless of
     layout (the "chunks" key is kept for chunk-granular commits).
     ``ref`` selects a branch's manifest line instead of main's."""
-    versions = _manifest_versions(spark, table_path, ref)
-    if not versions:
-        raise ValueError(f"{table_path} has no manifests for ref {ref!r}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(
-            f"version {v} not in {versions} for {table_path} (ref {ref!r})"
-        )
+    v = mf.pick_version(
+        _manifest_versions(spark, table_path, ref), version, table_path, ref
+    )
     return _assemble(
         spark, table_path, _read_manifest_file(spark, table_path, v, ref)
     )
@@ -199,39 +187,10 @@ def read_manifest(
 
 def _assemble(spark: SparkSession, table_path: str, doc: dict,
               chunk_filter=None) -> dict:
-    """Resolve a chunked snapshot into the classic manifest shape.
-    ``chunk_filter(entry) -> bool`` skips chunks it rejects — the
-    metadata half of a point lookup (entries carry per-chunk key
-    ranges; a rejected chunk provably holds no matching file, so its
-    chunk file is never even read). Classic docs pass through."""
-    if "chunks" not in doc:
-        return doc
-    files: list[str] = []
-    stats: dict = {}
-    born: dict = {}
-    sizes: dict = {}
-    entries: list[dict] = []
-    for entry in doc["chunks"]:
-        if chunk_filter is not None and not chunk_filter(entry):
-            continue
-        chunk = _read_json(spark, table_path, entry["file"])
-        files.extend(chunk["files"])
-        stats.update(chunk.get("stats") or {})
-        born.update(chunk.get("born") or {})
-        sizes.update(chunk.get("sizes") or {})
-        # membership rides along (stripped before re-serialization) so
-        # a later commit can carry untouched chunks by reference
-        # without re-reading them
-        entries.append({**entry, "_members": chunk["files"]})
-    out = dict(doc)
-    out["chunks"] = entries
-    out["files"] = files
-    out["stats"] = stats
-    if born:
-        out["born"] = born
-    if sizes:
-        out["sizes"] = sizes
-    return out
+    """:func:`prox_spark.manifest.assemble` over the Hadoop FS."""
+    return mf.assemble(
+        doc, lambda rel: _read_json(spark, table_path, rel), chunk_filter
+    )
 
 
 def read_manifest_pruned(
@@ -246,44 +205,20 @@ def read_manifest_pruned(
     ride on the snapshot doc, so merge-on-read masking still applies
     to every file actually read. Classic tables return the full
     manifest."""
-    versions = _manifest_versions(spark, table_path)
-    if not versions:
-        raise ValueError(f"{table_path} is not a manifest table")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions} for {table_path}")
+    v = mf.pick_version(
+        _manifest_versions(spark, table_path), version, table_path
+    )
     doc = _read_manifest_file(spark, table_path, v)
     return _assemble(
         spark, table_path, doc,
-        chunk_filter=lambda e: _overlaps(e.get("ranges"), key_ranges),
+        chunk_filter=lambda e: mf.admits_range(e.get("ranges"), key_ranges),
     )
 
 
 def _read_manifest_file(
     spark: SparkSession, table_path: str, v: int, ref: str = "main"
 ) -> dict:
-    return _read_json(
-        spark, table_path, f"{MANIFEST_DIR}/{_mprefix(ref)}{v:08d}.json"
-    )
-
-
-def _is_foreign(entry: str) -> bool:
-    """True when a manifest file entry is an ABSOLUTE path or full URI
-    rather than a table-relative one. Relative entries are the norm;
-    a SHALLOW CLONE's manifest references the source table's files
-    absolutely (the Delta shallow-clone convention), so they resolve
-    as-is and never collide with the clone's own ``data/`` listing —
-    which is what keeps the clone's vacuum/compaction cleanup (both
-    act only on locally-listed files) physically unable to touch the
-    source's data."""
-    return entry.startswith("/") or "://" in entry
-
-
-def _abs(table_path: str, entry: str) -> str:
-    """Resolve a manifest file entry to a readable path: relative
-    entries join the table dir, foreign (absolute/URI) entries from a
-    shallow clone pass through untouched."""
-    return entry if _is_foreign(entry) else f"{table_path}/{entry}"
+    return _read_json(spark, table_path, mf.manifest_file(v, ref))
 
 
 def _is_missing_file_error(ex: Exception) -> bool:
@@ -368,7 +303,7 @@ def _read_files(
     born = manifest.get("born") or {}
     if not deletes and not renames:
         return spark.read.schema(schema).parquet(
-            *[_abs(table_path, f) for f in files]
+            *[mf.entry_path(table_path, f) for f in files]
         )
     d_sets = [set(d["targets"]) for d in deletes]
     groups: dict[tuple, list[str]] = {}
@@ -399,7 +334,7 @@ def _read_files(
             )
         read_schema = StructType(read_fields)
         df = spark.read.schema(read_schema).parquet(
-            *[_abs(table_path, f) for f in groups[(d_sig, r_sig)]]
+            *[mf.entry_path(table_path, f) for f in groups[(d_sig, r_sig)]]
         )
         if any(p.name != d.name for p, d in zip(read_fields, schema.fields)):
             # one positional select, not sequential withColumnRenamed:
@@ -414,7 +349,7 @@ def _read_files(
         for i in d_sig:
             d = deletes[i]
             dset = (
-                spark.read.parquet(_abs(table_path, d["file"]))
+                spark.read.parquet(mf.entry_path(table_path, d["file"]))
                 .select(*d["keys"])
                 .distinct()
             )
@@ -500,152 +435,36 @@ def _footer_stats(abs_path: str, cols: list[str]) -> dict | None:
         return None
 
 
-def _chunk_ranges(files: list[str], stats: dict, stat_cols: list[str]):
-    """Per-chunk min/max over the member files' footer stats — the
-    chunk-level pruning index recorded in the snapshot doc. A column
-    degrades to None (never pruned on) if ANY member lacks stats."""
-    if not stat_cols:
-        return None
-    out: dict = {}
-    for c in stat_cols:
-        lo = hi = None
-        ok = True
-        for f in files:
-            fst = stats.get(f)
-            st = fst.get(c) if fst else None
-            if st is None:
-                ok = False
-                break
-            try:
-                lo = st[0] if lo is None else min(lo, st[0])
-                hi = st[1] if hi is None else max(hi, st[1])
-            except TypeError:
-                # incomparable stat types across files (int in some,
-                # stringified in others): degrade to no-range, the
-                # documented conservative path — never a failed commit
-                ok = False
-                break
-        out[c] = [lo, hi] if ok and lo is not None else None
-    return out
-
-
-def _write_chunk(spark: SparkSession, table_path: str, files: list[str],
-                 stats: dict, stat_cols: list[str],
-                 born: dict | None = None,
-                 sizes: dict | None = None) -> dict:
-    """Write one immutable manifest-chunk file; returns its snapshot
-    entry. Chunk files are invisible until a published snapshot
-    references them (same protocol as data files), so a failed commit
-    leaves only vacuum-able orphans."""
+def _write_json(spark: SparkSession, table_path: str, rel: str,
+                doc: dict) -> None:
+    """Create the table-relative JSON document ``rel``, never
+    overwriting. Chunk files written this way are invisible until a
+    published snapshot references them (same protocol as data files),
+    so a failed commit leaves only vacuum-able orphans."""
     jvm, fs, _ = _fs(spark, table_path)
-    rel = f"{MANIFEST_DIR}/chunks/mc-{uuid.uuid4().hex}.json"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}/chunks"))
-    doc = {"files": files, "stats": {f: stats.get(f) for f in files}}
-    if born:
-        doc["born"] = {f: born[f] for f in files if f in born}
-    if sizes:
-        doc["sizes"] = {f: sizes[f] for f in files if f in sizes}
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(f"{table_path}/{rel}"), False)
+    path = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{rel}")
+    fs.mkdirs(path.getParent())
+    out = fs.create(path, False)
     out.write(bytearray(json.dumps(doc), "utf-8"))
     out.close()
-    entry = {"file": rel, "n": len(files)}
-    ranges = _chunk_ranges(files, stats, stat_cols)
-    if ranges is not None:
-        entry["ranges"] = ranges
-    return entry
-
-
-def _build_layout(spark: SparkSession, table_path: str, cur: dict,
-                  keep_now: list[str], new_files: list[str],
-                  stats: dict, stat_cols: list[str],
-                  carry_entries: list | None = None,
-                  born: dict | None = None,
-                  sizes: dict | None = None) -> tuple[dict, list[str]]:
-    """The {files, stats} or {chunks} half of the next snapshot doc,
-    plus the chunk files written for it (for conflict cleanup).
-    Chunked when the previous version already is, or the table has
-    outgrown the inline single-doc layout: untouched chunks carry by
-    reference; members of partially-invalidated chunks and the new
-    files repack into fresh chunks sorted by leading stat column so
-    chunk ranges stay tight for pruning. ``carry_entries``: chunk
-    entries a chunk-pruned merge scope proved disjoint — carried
-    verbatim without ever having been read."""
-    total = len(keep_now) + len(new_files)
-    prev_chunks = cur.get("chunks") or []
-    if not prev_chunks and not carry_entries and total <= CHUNK_THRESHOLD:
-        out = {"files": [*keep_now, *new_files], "stats": stats}
-        if born:
-            out["born"] = born
-        if sizes:
-            out["sizes"] = sizes
-        return out, []
-    keep_set = set(keep_now)
-    carried = [
-        {k: v for k, v in e.items() if k != "_members"}
-        for e in carry_entries or []
-    ]
-    covered: set = set()
-    for entry in prev_chunks:
-        members = entry.get("_members")
-        if members is not None and set(members) <= keep_set:
-            carried.append({k: v for k, v in entry.items() if k != "_members"})
-            covered.update(members)
-    loose = [f for f in keep_now if f not in covered] + list(new_files)
-    if stat_cols:
-        lead = stat_cols[0]
-
-        def key(f):
-            st = stats.get(f)
-            r = st.get(lead) if st else None
-            return (r is None, r[0] if r else None, f)
-
-        try:
-            loose.sort(key=key)
-        except TypeError:  # incomparable stat types across files
-            loose.sort()
-    written = []
-    for i in range(0, len(loose), CHUNK_SIZE):
-        entry = _write_chunk(
-            spark, table_path, loose[i : i + CHUNK_SIZE], stats, stat_cols,
-            born, sizes,
-        )
-        carried.append(entry)
-        written.append(entry["file"])
-    return {"chunks": carried}, written
 
 
 def _cas_publish(jvm, fs, tmp, final) -> bool:
     """Atomically promote ``tmp`` to ``final`` iff no other writer holds
-    that name; returns False on a lost race. ``tmp`` (and its local
-    checksum twin) is always consumed.
+    that name; returns False on a lost race. ``tmp`` is always
+    consumed.
 
     The classic ``exists() + rename()`` idiom is NOT a CAS on local
-    filesystems: Hadoop's local rename maps to ``File.renameTo`` →
-    POSIX ``rename(2)``, which silently REPLACES an existing
-    destination — two racing publishers can both pass the exists()
-    check, both rename, and both report success while one document
-    vanishes (reproduced by tests/test_txn.py's threaded race). Local
-    paths therefore publish via ``os.link``, which fails atomically on
-    an existing target (the ``table_ds._publish_cas`` primitive).
-    HDFS-like filesystems keep exists+rename: their rename is atomic
-    and refuses an existing destination."""
-    scheme = final.toUri().getScheme()
-    if scheme in (None, "file"):
-        src = tmp.toUri().getPath()
-        dst = final.toUri().getPath()
-        try:
-            os.link(src, dst)
-            ok = True
-        except OSError:
-            ok = False
-        # consume the tmp file and the .crc twin ChecksumFileSystem wrote
-        d, name = os.path.split(src)
-        for p in (src, os.path.join(d, f".{name}.crc")):
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-        return ok
+    filesystems: Hadoop's local rename maps to POSIX ``rename(2)``,
+    which silently REPLACES an existing destination — two racing
+    publishers can both pass the exists() check and both report
+    success while one document vanishes (reproduced by
+    tests/test_txn.py's threaded race). Local paths therefore publish
+    via :func:`prox_spark.manifest.link_publish`. HDFS-like
+    filesystems keep exists+rename: their rename is atomic and
+    refuses an existing destination."""
+    if final.toUri().getScheme() in (None, "file"):
+        return mf.link_publish(tmp.toUri().getPath(), final.toUri().getPath())
     if fs.exists(final):
         fs.delete(tmp, False)
         return False
@@ -667,7 +486,7 @@ def _write_manifest(spark: SparkSession, table_path: str, v: int,
     out.write(bytearray(json.dumps(manifest), "utf-8"))
     out.close()
     final = jvm.org.apache.hadoop.fs.Path(
-        f"{table_path}/{MANIFEST_DIR}/{_mprefix(ref)}{v:08d}.json"
+        f"{table_path}/{mf.manifest_file(v, ref)}"
     )
     if not _cas_publish(jvm, fs, tmp, final):
         # a racing writer published v first: fail the CAS loudly and
@@ -902,7 +721,7 @@ def commit_delta(
         for f in rewritten:
             try:
                 rewritten_bytes += fs2.getFileStatus(
-                    jvm2.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                    jvm2.org.apache.hadoop.fs.Path(mf.entry_path(table_path, f))
                 ).getLen()
             except Exception:
                 pass
@@ -1121,23 +940,18 @@ def commit_delta(
             if cur_v == base_version
             else [f for f in cur["files"] if f not in rewritten_set]
         )
-        stats = {f: (cur.get("stats") or {}).get(f) for f in keep_now}
-        stats.update(new_stats)
-        cur_sizes = cur.get("sizes") or {}
-        sizes_now = {
-            f: cur_sizes[f] for f in keep_now if f in cur_sizes
-        }
-        sizes_now.update(new_sizes)
         # per-file birth versions drive rename-mapping applicability:
         # a file born at version b physically carries the column names
         # declared at b, so renames committed after b apply to it and
         # renames before b don't. Files without a record are treated
         # as born at 0 (pre-feature tables: every rename applies).
-        cur_born = cur.get("born") or {}
-        born_now = {f: cur_born.get(f, 0) for f in keep_now}
-        born_now.update(dict.fromkeys(new_files, v))
-        layout, written_chunks = _build_layout(
-            spark, table_path, cur, keep_now, new_files, stats, stat_cols,
+        stats, born_now, sizes_now = mf.file_meta(
+            cur, keep_now, new_files, new_stats, new_sizes, v
+        )
+        layout, written_chunks = mf.next_layout(
+            cur, keep_now, new_files, stats, stat_cols,
+            lambda rel, doc: _write_json(spark, table_path, rel, doc),
+            threshold=CHUNK_THRESHOLD, chunk_size=CHUNK_SIZE,
             # after a rebase, cur is FULLY assembled and its own chunk
             # entries cover the formerly-disjoint chunks — passing
             # carry_chunks again would double-list them
@@ -1211,27 +1025,10 @@ def commit_delta(
         )
         if still_dropped:
             manifest["dropped_cols"] = still_dropped
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        if cur.get("cloned_from"):
-            # a shallow clone's origin record survives every routine
-            # commit (like constraints): release_clone_pin resolves
-            # the source tag through the LATEST manifest, so the pin
-            # stays releasable even after the clone's genesis manifest
-            # is vacuumed away
-            manifest["cloned_from"] = cur["cloned_from"]
-        if cur.get("mv_of"):
-            # a materialized view's lineage likewise survives routine
-            # commits (compaction, maintenance); a refresh overrides
-            # it through extra_meta below — in the SAME atomic rename
-            # as the refreshed data
-            manifest["mv_of"] = cur["mv_of"]
-        if cur.get("quantizer"):
-            # an IVF index's coarse-quantizer parameters version WITH
-            # the data: appends assign against the stored centroids,
-            # and recluster_index overrides them through extra_meta in
-            # the same rename as the rebuilt assignment
-            manifest["quantizer"] = cur["quantizer"]
+        # table-level metadata survives every commit; an owner
+        # overrides its record (an MV refresh's lineage, a recluster's
+        # quantizer) through extra_meta, in the same atomic rename
+        mf.carry(cur, manifest)
         if extra_meta:
             manifest.update(extra_meta)
         try:
@@ -1348,7 +1145,10 @@ def _validate_rebase(
         )
     if update_key_ranges:
         stats = cur.get("stats") or {}
-        hot = [f for f in added if _overlaps(stats.get(f), update_key_ranges)]
+        hot = [
+            f for f in added
+            if mf.admits_range(stats.get(f), update_key_ranges)
+        ]
         if hot:
             raise CommitConflictError(
                 "concurrently-added files may hold keys in this merge's "
@@ -1418,7 +1218,7 @@ def create_branch(
     overwrite a live branch."""
     if name == "main":
         raise ValueError("'main' is the published table, not a branch name")
-    _mprefix(name)  # validate early, before any FS IO
+    mf.prefix(name)  # validate early, before any FS IO
     versions = _manifest_versions(spark, table_path)
     if not versions:
         raise ValueError(f"{table_path} is not a manifest table")
@@ -1435,20 +1235,7 @@ def create_branch(
 def list_branches(spark: SparkSession, table_path: str) -> dict[str, list[int]]:
     """Live branches and their version lists (ascending; the first
     entry is the fork base)."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return {}
-    out: dict[str, list[int]] = {}
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith("branch.") and fname.endswith(".json")):
-            continue
-        body = fname[len("branch.") : -len(".json")]
-        name, _, v = body.rpartition(".")
-        if name and v.isdigit():
-            out.setdefault(name, []).append(int(v))
-    return {k: sorted(vs) for k, vs in sorted(out.items())}
+    return mf.branches_in(name for name, _ in _manifest_dir(spark, table_path))
 
 
 def drop_branch(spark: SparkSession, table_path: str, name: str) -> None:
@@ -1457,11 +1244,10 @@ def drop_branch(spark: SparkSession, table_path: str, name: str) -> None:
     post-grace :func:`vacuum` reclaims — same lifecycle as a failed
     commit's files."""
     jvm, fs, _ = _fs(spark, table_path)
-    prefix = _mprefix(name)
     for v in _manifest_versions(spark, table_path, name):
         fs.delete(
             jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{MANIFEST_DIR}/{prefix}{v:08d}.json"
+                f"{table_path}/{mf.manifest_file(v, name)}"
             ),
             False,
         )
@@ -1526,13 +1312,8 @@ def fast_forward(spark: SparkSession, table_path: str, name: str) -> int:
             cborn = cdoc.get("born") or {}
             if any(bv > fork for bv in cborn.values()):
                 cdoc["born"] = _remap(cborn)
-                rel = f"{MANIFEST_DIR}/chunks/mc-{uuid.uuid4().hex}.json"
-                out = fs.create(
-                    jvm.org.apache.hadoop.fs.Path(f"{table_path}/{rel}"),
-                    False,
-                )
-                out.write(bytearray(json.dumps(cdoc), "utf-8"))
-                out.close()
+                rel = mf.new_chunk_file()
+                _write_json(spark, table_path, rel, cdoc)
                 written_chunks.append(rel)
                 entry = {**entry, "file": rel}
             new_entries.append(entry)
@@ -1574,7 +1355,7 @@ def create_tag(
     version."""
     if name == "main":
         raise ValueError("'main' is the published line, not a tag name")
-    _mprefix(name)  # same charset rules as branches
+    mf.prefix(name)  # same charset rules as branches
     versions = _manifest_versions(spark, table_path)
     if not versions:
         raise ValueError(f"{table_path} is not a manifest table")
@@ -1587,9 +1368,7 @@ def create_tag(
             "immutable — drop_tag it first to re-point"
         )
     jvm, fs, _ = _fs(spark, table_path)
-    final = jvm.org.apache.hadoop.fs.Path(
-        f"{table_path}/{MANIFEST_DIR}/tag.{name}.json"
-    )
+    final = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{mf.tag_file(name)}")
     tmp = jvm.org.apache.hadoop.fs.Path(
         f"{table_path}/{MANIFEST_DIR}/.tmp-tag-{uuid.uuid4().hex}.json"
     )
@@ -1614,14 +1393,9 @@ def create_tag(
 
 def list_tags(spark: SparkSession, table_path: str) -> dict[str, int]:
     """Live tags: name -> pinned main version."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return {}
     out: dict[str, int] = {}
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith("tag.") and fname.endswith(".json")):
+    for fname, _ in _manifest_dir(spark, table_path):
+        if not mf.is_tag_file(fname):
             continue
         try:
             doc = _read_json(spark, table_path, f"{MANIFEST_DIR}/{fname}")
@@ -1638,9 +1412,7 @@ def drop_tag(spark: SparkSession, table_path: str, name: str) -> None:
     out through the normal vacuum policy."""
     jvm, fs, _ = _fs(spark, table_path)
     fs.delete(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{table_path}/{MANIFEST_DIR}/tag.{name}.json"
-        ),
+        jvm.org.apache.hadoop.fs.Path(f"{table_path}/{mf.tag_file(name)}"),
         False,
     )
 
@@ -1690,29 +1462,6 @@ def rollback_table(
     return head + 1
 
 
-def _manifest_publish_times(
-    spark: SparkSession, table_path: str, ref: str = "main"
-) -> dict[int, float]:
-    """{version: publish time (epoch ms)} from the manifest files' own
-    modification times — the atomic renames that made each version
-    visible (the same clock :func:`version_at_timestamp` resolves
-    against, so age-based retention and TIMESTAMP AS OF agree)."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    prefix = _mprefix(ref)
-    out: dict[int, float] = {}
-    if not fs.exists(mdir):
-        return out
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith(prefix) and fname.endswith(".json")):
-            continue
-        body = fname[len(prefix):-len(".json")]
-        if body.isdigit():
-            out[int(body)] = float(st.getModificationTime())
-    return out
-
-
 def version_at_timestamp(
     spark: SparkSession, table_path: str, ts_ms: float, ref: str = "main"
 ) -> int:
@@ -1724,33 +1473,9 @@ def version_at_timestamp(
     existing table resolves. Raises when the timestamp predates the
     oldest readable version (it may have been vacuumed) or the table
     has no manifests."""
-    jvm, fs, _ = _fs(spark, table_path)
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}")
-    prefix = _mprefix(ref)
-    if not fs.exists(mdir):
-        raise ValueError(f"{table_path} is not a manifest table")
-    best = None
-    oldest = None
-    for st in fs.listStatus(mdir):
-        fname = st.getPath().getName()
-        if not (fname.startswith(prefix) and fname.endswith(".json")):
-            continue
-        body = fname[len(prefix):-len(".json")]
-        if not body.isdigit():
-            continue
-        v = int(body)
-        oldest = v if oldest is None else min(oldest, v)
-        if st.getModificationTime() <= ts_ms and (best is None or v > best):
-            best = v
-    if best is None:
-        if oldest is None:
-            raise ValueError(f"{table_path} is not a manifest table")
-        raise ValueError(
-            f"no version of {table_path} (ref {ref!r}) existed at "
-            f"{ts_ms}; the oldest readable version is {oldest} "
-            "(earlier ones may have been vacuumed)"
-        )
-    return best
+    return mf.version_at(
+        _manifest_publish_times(spark, table_path, ref), ts_ms, table_path, ref
+    )
 
 
 def read_table_as_of(
@@ -1797,18 +1522,14 @@ def clone_table(
     - The source's ``index_of`` value-index registration is NOT
       carried (index artifacts live under the source; rebuild against
       the clone if needed)."""
-    import os as _os
-
     if is_manifest_table(spark, dst_path):
         raise ValueError(f"{dst_path} is already a manifest table")
-    base = src_path
-    if not _is_foreign(base):
-        base = _os.path.abspath(base)
+    base = src_path if mf.is_foreign(src_path) else os.path.abspath(src_path)
     src = read_manifest(spark, src_path, version)
     src_v = int(src["version"])
 
     def a(e: str) -> str:
-        return e if _is_foreign(e) else f"{base}/{e}"
+        return mf.entry_path(base, e)
 
     tag = None
     if pin:
@@ -1980,10 +1701,7 @@ def commit_delete_file(
             # key file + a snapshot doc of O(chunk-count) entries,
             # never the full file list (per-file born records live in
             # the chunks and carry with them)
-            manifest["chunks"] = [
-                {k: val for k, val in e.items() if k != "_members"}
-                for e in cur["chunks"]
-            ]
+            manifest["chunks"] = [mf.raw_entry(e) for e in cur["chunks"]]
         else:
             manifest["files"] = cur["files"]
             manifest["stats"] = cur.get("stats") or {}
@@ -2059,9 +1777,8 @@ def _files_carrying(
     want = set(cols)
     out = []
     for f in files:
-        p = _abs(table_path, f)
-        local = p[len("file:"):] if p.startswith("file:") else p
         try:
+            local = mf.local_path(mf.entry_path(table_path, f))
             names = set(pq.read_schema(local).names)
         except Exception:
             out.append(f)
@@ -2310,7 +2027,8 @@ def set_cluster_spec(spark: SparkSession, table_path: str,
     - OLD files keep their recorded per-file min/max (and blooms) on
       the old columns — probes on the old columns still prune them
       exactly; probes on the NEW columns find no recorded range and
-      treat them conservatively hot (:func:`_overlaps` — sound, just
+      treat them conservatively hot (:func:`prox_spark.manifest.admits_range`
+      — sound, just
       unpruned until rewritten);
     - NEW commits cluster, stat and bloom on the new spec
       (``commit_delta`` inherits the declared columns), so fresh data
@@ -2347,25 +2065,6 @@ def set_cluster_spec(spark: SparkSession, table_path: str,
     return _commit_meta_change(spark, table_path, mutate)
 
 
-def _overlaps(fstats: dict | None, key_ranges: dict[str, tuple]) -> bool:
-    """Could a file with footer stats ``fstats`` contain any key tuple
-    whose per-column values fall inside ``key_ranges``? Disjointness on
-    ANY single column proves no tuple can match; unknown stats are
-    conservatively 'yes'."""
-    if fstats is None:
-        return True
-    for col, (lo, hi) in key_ranges.items():
-        fr = fstats.get(col)
-        if fr is None or lo is None:
-            continue  # unknown on either side -> can't prune on this col
-        try:
-            if fr[1] < lo or fr[0] > hi:
-                return False
-        except TypeError:  # incomparable types (e.g. stats stringified)
-            continue
-    return True
-
-
 def split_files_by_key_ranges(
     manifest: dict, key_ranges: dict[str, tuple]
 ) -> tuple[list[str], list[str]]:
@@ -2373,11 +2072,11 @@ def split_files_by_key_ranges(
     key-based merge: ``untouched`` files provably contain NO key tuple
     in the given per-column ranges and can be carried into the next
     version verbatim."""
-    touched, untouched = [], []
     stats = manifest.get("stats") or {}
-    for f in manifest.get("files", []):
-        (touched if _overlaps(stats.get(f), key_ranges) else untouched).append(f)
-    return touched, untouched
+    return _split(
+        manifest.get("files", []),
+        lambda f: mf.admits_range(stats.get(f), key_ranges),
+    )
 
 
 def split_chunks_by_key_sets(
@@ -2387,65 +2086,37 @@ def split_chunks_by_key_sets(
     (overlap, disjoint) for a key-based merge: a DISJOINT chunk's
     recorded per-chunk ranges prove that NO batch key value falls
     inside them on some column, so the chunk file is never read and
-    its entry carries into the next version by reference. One bisect
-    per (chunk, column) — the chunk-granular analog of
-    :func:`split_files_by_key_sets`. Entries without ranges are
-    conservatively overlap."""
-    from bisect import bisect_left
-
-    overlap, disjoint = [], []
-    for entry in doc.get("chunks", []):
-        ranges = entry.get("ranges")
-        hit = True
-        if ranges:
-            for col, vals in key_values.items():
-                r = ranges.get(col)
-                if r is None or not vals:
-                    continue
-                try:
-                    i = bisect_left(vals, r[0])
-                except TypeError:  # incomparable types -> can't prune
-                    continue
-                if i >= len(vals) or vals[i] > r[1]:
-                    hit = False
-                    break
-        (overlap if hit else disjoint).append(entry)
-    return overlap, disjoint
+    its entry carries into the next version by reference — the
+    chunk-granular analog of :func:`split_files_by_key_sets`. Entries
+    without ranges are conservatively overlap."""
+    return _split(
+        doc.get("chunks", []),
+        lambda e: mf.admits_keys(e.get("ranges"), key_values),
+    )
 
 
 def split_files_by_key_sets(
     manifest: dict, key_values: dict[str, list]
 ) -> tuple[list[str], list[str]]:
     """Key-SET file pruning: ``key_values`` maps each key column to
-    the SORTED distinct values present in the update batch. A file is
-    untouched when, for some column, NO batch value falls inside the
-    file's [min, max] — checked with one bisect per (file, column), so
-    scattered keys (the CDC norm: a handful of user ids spread across
-    the id space) prune almost everything, where a min/max RANGE test
-    would span the whole table and prune nothing. Conservative for
-    multi-column keys (per-column membership is necessary, not
-    sufficient, for a tuple match) — never lossy."""
-    from bisect import bisect_left
-
-    touched, untouched = [], []
+    the SORTED distinct values present in the update batch; a file is
+    untouched when :func:`prox_spark.manifest.admits_keys` rejects its
+    stats — so scattered keys (the CDC norm: a handful of user ids
+    spread across the id space) prune almost everything, where a
+    min/max RANGE test would span the whole table and prune nothing.
+    Never lossy."""
     stats = manifest.get("stats") or {}
-    for f in manifest.get("files", []):
-        fstats = stats.get(f)
-        hit = True
-        if fstats is not None:
-            for col, vals in key_values.items():
-                fr = fstats.get(col)
-                if fr is None or vals is None:
-                    continue
-                try:
-                    i = bisect_left(vals, fr[0])
-                except TypeError:  # incomparable types -> can't prune
-                    continue
-                if i >= len(vals) or vals[i] > fr[1]:
-                    hit = False
-                    break
-        (touched if hit else untouched).append(f)
-    return touched, untouched
+    return _split(
+        manifest.get("files", []),
+        lambda f: mf.admits_keys(stats.get(f), key_values),
+    )
+
+
+def _split(items: list, admits) -> tuple[list, list]:
+    hit, miss = [], []
+    for x in items:
+        (hit if admits(x) else miss).append(x)
+    return hit, miss
 
 
 def point_lookup_files(
@@ -2565,7 +2236,7 @@ def _value_incidences(
             r = renames[i]
             if phys == r["to"]:
                 phys = r["from"]
-        df = spark.read.parquet(*[_abs(table_path, f) for f in fs])
+        df = spark.read.parquet(*[mf.entry_path(table_path, f) for f in fs])
         parts.append(
             df.select(
                 F.col(phys).alias(col),
@@ -2781,7 +2452,7 @@ def compact_small_files(
         n = sizes.get(f)
         if n is None:
             n = fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                jvm.org.apache.hadoop.fs.Path(mf.entry_path(table_path, f))
             ).getLen()
         if n < limit:
             small.append(f)
@@ -2880,7 +2551,7 @@ def maintain_table(
             for f in stat_fallback:
                 try:
                     if fs.getFileStatus(
-                        jvm.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                        jvm.org.apache.hadoop.fs.Path(mf.entry_path(table_path, f))
                     ).getLen() < limit:
                         n_small += 1
                 except Exception:  # noqa: PERF203 - racing vacuum/rewrite
@@ -2922,29 +2593,25 @@ def table_history(spark: SparkSession, table_path: str) -> list[dict]:
         if f not in sizes:
             try:
                 sizes[f] = fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(_abs(table_path, f))
+                    jvm.org.apache.hadoop.fs.Path(mf.entry_path(table_path, f))
                 ).getLen()
             except Exception:
                 sizes[f] = 0  # vacuumed-from-under or in-flight: unknown
         return sizes[f]
 
-    chunk_files: dict[str, list[str]] = {}  # carried chunks repeat
+    chunk_docs: dict[str, dict] = {}  # carried chunks repeat
+
+    def _chunk(rel: str) -> dict:
+        if rel not in chunk_docs:
+            chunk_docs[rel] = _read_json(spark, table_path, rel)
+        return chunk_docs[rel]
+
     for v in _manifest_versions(spark, table_path):  # ONE listing
-        m = _read_manifest_file(spark, table_path, v)
-        if "chunks" in m:
-            files = []
-            for e in m["chunks"]:
-                if e["file"] not in chunk_files:
-                    cdoc = _read_json(spark, table_path, e["file"])
-                    chunk_files[e["file"]] = cdoc["files"]
-                    # commit-time recorded sizes pre-seed the cache:
-                    # zero stat RPCs for files committed since the
-                    # sizes record exists
-                    sizes.update(cdoc.get("sizes") or {})
-                files.extend(chunk_files[e["file"]])
-        else:
-            files = m.get("files")
-            sizes.update(m.get("sizes") or {})
+        m = mf.assemble(_read_manifest_file(spark, table_path, v), _chunk)
+        files = m.get("files")
+        # commit-time recorded sizes pre-seed the cache: zero stat
+        # RPCs for files committed since the sizes record exists
+        sizes.update(m.get("sizes") or {})
         if files is None:  # legacy single-snapshot-dir manifest
             out.append({"version": v, "legacy_data_dir": m.get("data")})
             continue
@@ -3054,14 +2721,14 @@ def vacuum(
             kept_dirs.update(
                 f.split("/")[1]
                 for f in m["files"]
-                if "/" in f and not _is_foreign(f)
+                if "/" in f and not mf.is_foreign(f)
             )
             # merge-on-read delete key files are data too: retiring one
             # that a kept manifest still references would resurrect rows
             kept_dirs.update(
                 d["file"].split("/")[1]
                 for d in m.get("deletes") or []
-                if not _is_foreign(d["file"])
+                if not mf.is_foreign(d["file"])
             )
         else:
             kept_dirs.add(m["data"].split("/", 1)[1])
@@ -3099,7 +2766,7 @@ def vacuum(
     for v in dropped:
         fs.delete(
             jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{MANIFEST_DIR}/manifest-{v:08d}.json"
+                f"{table_path}/{mf.manifest_file(v)}"
             ),
             False,
         )
@@ -3160,7 +2827,7 @@ def vacuum(
         for st in fs.listStatus(ddir):
             if st.getPath().getName() not in kept_dirs and _dir_is_old(st):
                 fs.delete(st.getPath(), True)
-    cdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{MANIFEST_DIR}/chunks")
+    cdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{mf.CHUNK_DIR}")
     if fs.exists(cdir):
         for st in fs.listStatus(cdir):
             if (

@@ -32,8 +32,12 @@ queryable and writable without library imports:
      .option("readChangeFeed", "true")
      .option("startingVersion", "2").load(path))
 
-Full read semantics are replicated, not approximated — the module
-shares the manifest layout with ``table.py`` and applies, per file:
+Full read semantics are replicated, not approximated. Every format
+decision — manifest naming, chunk assembly, foreign-entry resolution,
+pruning tests, the next-version layout — comes from
+``prox_spark/manifest.py``, the same module ``table.py`` uses, and
+manifests are read through its ``pyarrow.fs`` reader (the Data Source
+workers have no SparkSession). Per file, the reader applies:
 
 - SCHEMA EVOLUTION: files written before an add-column read the new
   columns as typed nulls (declared schema drives the decode).
@@ -42,26 +46,27 @@ shares the manifest layout with ``table.py`` and applies, per file:
   (``table.py _read_files`` semantics, including a->b->c chains).
 - MERGE-ON-READ DELETES: each partition anti-filters its applicable
   equality-delete key sets (tiny parquet files, loaded task-side).
-- FILE PRUNING: ``pushFilters`` harvests range predicates on stat
-  columns and drops files whose committed min/max ranges provably
-  exclude them — the same ``_overlaps`` rule as
-  ``table.read_table_point`` — then returns every filter unsupported
-  so Spark re-applies them exactly (pruning is IO-only, never
+- FILE PRUNING: ``pushFilters`` harvests range and ``In`` predicates
+  on stat columns and drops files whose committed min/max ranges
+  provably exclude them — ``manifest.admits_range`` /
+  ``manifest.admits_keys``, the tests ``table.read_table_point`` and
+  the merge paths use — then returns every filter unsupported so
+  Spark re-applies them exactly (pruning is IO-only, never
   semantics).
 
 Scale shape: one InputPartition per live data file, so a 10k-file
 snapshot scans with 10k-way task parallelism; the reader streams
 Arrow RecordBatches straight from the parquet decoder (never
 row-at-a-time Python tuples); partition planning is driver-side
-metadata only. Manifests are read with plain-Python IO — the format
-targets Hadoop-compatible FS via ``table.py`` for writes, and this
-reader's FS shim is where an fsspec backend would slot in.
+metadata only. Writes go to the local filesystem and publish through
+``manifest.link_publish``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -80,149 +85,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-MANIFEST_DIR = "_manifests"
+from prox_spark import manifest as mf
+
 # workspace staging area for writer-recorded (table → version) pins,
 # published atomically by txn.txn_publish_staged
 TXN_STAGING_DIR = "_txn_staging"
-
-
-def _local(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
-
-
-def _mprefix(ref: str) -> str:
-    return "manifest-" if ref == "main" else f"branch.{ref}."
-
-
-def manifest_py(
-    table_path: str, version: int | None = None, ref: str = "main"
-) -> dict:
-    """Pure-Python twin of ``table.read_manifest`` (which routes
-    through the JVM Hadoop FS — unavailable inside a DataSource):
-    resolve the manifest doc for ``version`` (default latest) on
-    ``ref`` and assemble chunked (v2) snapshots into the classic
-    ``{files, stats, born, sizes, ...}`` shape."""
-    root = _local(table_path)
-    mdir = os.path.join(root, MANIFEST_DIR)
-    pre = _mprefix(ref) if ref == "main" else f"branch.{ref}."
-    try:
-        names = os.listdir(mdir)
-    except FileNotFoundError:
-        raise ValueError(f"{table_path} is not a manifest table") from None
-    versions = sorted(
-        int(n[len(pre):-len(".json")])
-        for n in names
-        if n.startswith(pre)
-        and n.endswith(".json")
-        and n[len(pre):-len(".json")].isdigit()
-    )
-    if not versions:
-        raise ValueError(f"{table_path} has no manifests for ref {ref!r}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions} for {table_path}")
-    with open(os.path.join(mdir, f"{pre}{v:08d}.json")) as fh:
-        doc = json.load(fh)
-    if "chunks" in doc:
-        files: list[str] = []
-        stats: dict = {}
-        born: dict = {}
-        sizes: dict = {}
-        for entry in doc["chunks"]:
-            with open(os.path.join(root, entry["file"])) as fh:
-                chunk = json.load(fh)
-            files.extend(chunk["files"])
-            stats.update(chunk.get("stats") or {})
-            born.update(chunk.get("born") or {})
-            sizes.update(chunk.get("sizes") or {})
-        doc = dict(doc)
-        doc["files"] = files
-        doc["stats"] = stats
-        doc["born"] = born
-        doc["sizes"] = sizes
-    return doc
-
-
-def version_at_timestamp_py(
-    table_path: str, ts_ms: float, ref: str = "main"
-) -> int:
-    """Pure-Python twin of ``table.version_at_timestamp``: the newest
-    version whose manifest was PUBLISHED (file mtime — the atomic
-    rename that made it visible, the same clock the JVM path reads)
-    at or before ``ts_ms`` (epoch milliseconds)."""
-    root = _local(table_path)
-    mdir = os.path.join(root, MANIFEST_DIR)
-    pre = _mprefix(ref)
-    try:
-        names = os.listdir(mdir)
-    except FileNotFoundError:
-        raise ValueError(f"{table_path} is not a manifest table") from None
-    best = oldest = None
-    for n in names:
-        if not (n.startswith(pre) and n.endswith(".json")):
-            continue
-        body = n[len(pre):-len(".json")]
-        if not body.isdigit():
-            continue
-        v = int(body)
-        oldest = v if oldest is None else min(oldest, v)
-        mtime_ms = os.path.getmtime(os.path.join(mdir, n)) * 1000.0
-        if mtime_ms <= ts_ms and (best is None or v > best):
-            best = v
-    if best is None:
-        if oldest is None:
-            raise ValueError(f"{table_path} is not a manifest table")
-        raise ValueError(
-            f"no version of {table_path} (ref {ref!r}) existed at "
-            f"{ts_ms}; the oldest readable version is {oldest} "
-            "(earlier ones may have been vacuumed)"
-        )
-    return best
-
-
-def tag_version_py(table_path: str, name: str) -> int:
-    """Pure-Python twin of ``table.tag_version``: resolve an immutable
-    tag (``_manifests/tag.{name}.json``) to its pinned main version."""
-    root = _local(table_path)
-    p = os.path.join(root, MANIFEST_DIR, f"tag.{name}.json")
-    try:
-        with open(p) as f:
-            return int(json.load(f)["version"])
-    except FileNotFoundError:
-        raise ValueError(
-            f"tag {name!r} does not exist on {table_path}"
-        ) from None
-
-
-def _is_foreign(entry: str) -> bool:
-    return entry.startswith("/") or "://" in entry or entry.startswith("file:")
-
-
-def _abs(table_path: str, entry: str) -> str:
-    return _local(entry) if _is_foreign(entry) else os.path.join(
-        _local(table_path), entry
-    )
-
-
-def _overlaps(fstats: dict | None, key_ranges: dict[str, tuple]) -> bool:
-    """``table._overlaps`` semantics with explicit one-sided bounds:
-    ``(lo, None)`` means [lo, +inf), ``(None, hi)`` means (-inf, hi].
-    Disjointness on ANY column proves the file holds no matching
-    tuple; unknown stats never prune."""
-    if fstats is None:
-        return True
-    for col, (lo, hi) in key_ranges.items():
-        fr = fstats.get(col)
-        if fr is None:
-            continue
-        try:
-            if (lo is not None and fr[1] < lo) or (
-                hi is not None and fr[0] > hi
-            ):
-                return False
-        except TypeError:
-            continue
-    return True
 
 
 class _TableFilePartition(InputPartition):
@@ -298,30 +165,6 @@ def _filter_in_sets(filters) -> dict[str, list]:
         vals = set(f.value)
         sets[col] = sets[col] & vals if col in sets else vals
     return {c: sorted(v) for c, v in sets.items()}
-
-
-def _set_overlaps(fstats: dict | None, key_sets: dict[str, list]) -> bool:
-    """Could a file with footer stats ``fstats`` contain ANY of the
-    listed values on every constrained column? Unknown stats never
-    prune; incomparable values count as possible (conservative)."""
-    if fstats is None:
-        return True
-    for col, vals in key_sets.items():
-        fr = fstats.get(col)
-        if fr is None:
-            continue
-        hit = False
-        for v in vals:
-            try:
-                if fr[0] <= v <= fr[1]:
-                    hit = True
-                    break
-            except TypeError:
-                hit = True  # incomparable: cannot rule the value out
-                break
-        if not hit:
-            return False
-    return True
 
 
 # one scan task reads up to this many bytes of packed small files —
@@ -407,11 +250,12 @@ class ProxTableReader(DataSourceReader):
         if not self.key_ranges and not self.key_sets:
             return list(files)
         stats = self.manifest.get("stats") or {}
-        return [
-            f for f in files
-            if _overlaps(stats.get(f), self.key_ranges)
-            and _set_overlaps(stats.get(f), self.key_sets)
-        ]
+        return [f for f in files if self._admits(stats.get(f))]
+
+    def _admits(self, fstats: dict | None) -> bool:
+        return mf.admits_range(fstats, self.key_ranges) and mf.admits_keys(
+            fstats, self.key_sets
+        )
 
     def partitions(self):
         m = self.manifest
@@ -436,16 +280,12 @@ class ProxTableReader(DataSourceReader):
                         name = r["from"]
                 phys.append(name)
             dels = [
-                (_abs(self.table_path, d["file"]), list(d["keys"]))
+                (mf.local_entry(self.table_path, d["file"]), list(d["keys"]))
                 for d in deletes
                 if f in set(d["targets"])
             ]
-            descs.append(
-                (
-                    (_abs(self.table_path, f), phys, dels),
-                    sizes.get(f),
-                )
-            )
+            desc = (mf.local_entry(self.table_path, f), phys, dels)
+            descs.append((desc, sizes.get(f)))
         # greedy size packing: consecutive small files share one task
         # up to the byte budget; unknown sizes fill their own
         parts: list[_TableFilePartition] = []
@@ -464,20 +304,17 @@ class ProxTableReader(DataSourceReader):
 
     def matching_row_groups(self, pf, phys_names) -> list[int] | None:
         """ROW-GROUP skipping inside a file that survived the manifest
-        prune: the harvested filter ranges re-check against each row
-        group's own footer min/max (the same ``_overlaps`` rule one
-        level down), so a point probe through the connector decodes
+        prune: the harvested filter ranges and value sets re-check
+        against each row group's own footer min/max (the same
+        admission tests one level down), so a point probe through the connector decodes
         only the groups that can hold the key. None = read everything
         (no pushed ranges). Declared filter columns map through the
         partition's rename resolution; a group with absent stats on a
         column is conservatively kept."""
         if not self.key_ranges and not self.key_sets:
             return None
-        name_map = dict(
-            zip(
-                [f.name for f in self.schema_struct.fields],
-                phys_names,
-            )
+        declared = dict(
+            zip(phys_names, [f.name for f in self.schema_struct.fields])
         )
         md = pf.metadata
         keep: list[int] = []
@@ -487,34 +324,12 @@ class ProxTableReader(DataSourceReader):
             for ci in range(g.num_columns):
                 c = g.column(ci)
                 st = c.statistics
-                if st is not None and st.has_min_max:
-                    rg_stats[c.path_in_schema] = (st.min, st.max)
-            admit = True
-            for col, (lo, hi) in self.key_ranges.items():
-                phys = name_map.get(col)
-                if phys is None or phys not in rg_stats:
-                    continue
-                mn, mx = rg_stats[phys]
-                try:
-                    if (lo is not None and mx < lo) or (
-                        hi is not None and mn > hi
-                    ):
-                        admit = False
-                        break
-                except TypeError:  # incomparable stat types
-                    continue
-            if admit and self.key_sets:
-                # per-value In-list skipping: the group survives only
-                # if SOME listed value can fall inside its min/max
-                admit = _set_overlaps(
-                    {
-                        col: rg_stats[phys]
-                        for col in self.key_sets
-                        if (phys := name_map.get(col)) in rg_stats
-                    },
-                    self.key_sets,
-                )
-            if admit:
+                if (
+                    st is not None and st.has_min_max
+                    and c.path_in_schema in declared
+                ):
+                    rg_stats[declared[c.path_in_schema]] = (st.min, st.max)
+            if self._admits(rg_stats):
                 keep.append(rg)
         return keep
 
@@ -617,194 +432,24 @@ def _gather_messages(messages) -> tuple[list[str], dict, dict]:
     return new_files, sizes, stats
 
 
-def _snapshot_doc(v: int, new_files: list[str], stats: dict, sizes: dict,
-                  stat_cols: list[str], schema_json: dict) -> dict:
-    return {
-        "version": v,
-        "files": list(new_files),
-        "stats": {f: stats.get(f) for f in new_files},
-        "stat_cols": stat_cols,
-        "schema": schema_json,
-        "born": dict.fromkeys(new_files, v),
-        "sizes": dict(sizes),
-    }
-
-
-def _chunk_ranges_py(files: list[str], stats: dict,
-                     stat_cols: list[str]) -> dict | None:
-    """``table._chunk_ranges`` verbatim: per-chunk min/max over member
-    footer stats; a column degrades to None if ANY member lacks them."""
-    if not stat_cols:
-        return None
-    out: dict = {}
-    for c in stat_cols:
-        lo = hi = None
-        ok = True
-        for f in files:
-            fst = stats.get(f)
-            st = fst.get(c) if fst else None
-            if st is None:
-                ok = False
-                break
-            try:
-                lo = st[0] if lo is None else min(lo, st[0])
-                hi = st[1] if hi is None else max(hi, st[1])
-            except TypeError:
-                ok = False
-                break
-        out[c] = [lo, hi] if ok and lo is not None else None
-    return out
-
-
-def _write_chunks_py(table_path: str, files: list[str], stats: dict,
-                     born: dict, sizes: dict, stat_cols: list[str],
-                     chunk_size: int) -> tuple[list[dict], list[str]]:
-    """Write immutable manifest-chunk files for ``files`` (the
-    ``table._write_chunk`` layout, pure python); returns (snapshot
-    entries, written rel paths) — invisible until a published snapshot
-    references them, so a lost CAS leaves only vacuum-able orphans."""
-    import uuid
-
-    root = _local(table_path)
-    cdir = os.path.join(root, MANIFEST_DIR, "chunks")
-    os.makedirs(cdir, exist_ok=True)
-    entries: list[dict] = []
-    written: list[str] = []
-    ordered = sorted(files)
-    for i in range(0, len(ordered), chunk_size):
-        members = ordered[i:i + chunk_size]
-        rel = f"{MANIFEST_DIR}/chunks/mc-{uuid.uuid4().hex}.json"
-        doc = {
-            "files": members,
-            "stats": {f: stats.get(f) for f in members},
-            "born": {f: born[f] for f in members if f in born},
-            "sizes": {f: sizes[f] for f in members if f in sizes},
-        }
-        with open(os.path.join(root, rel), "w") as fh:
-            json.dump(doc, fh)
-        entry = {"file": rel, "n": len(members)}
-        ranges = _chunk_ranges_py(members, stats, stat_cols)
-        if ranges is not None:
-            entry["ranges"] = ranges
-        entries.append(entry)
-        written.append(rel)
-    return entries, written
-
-
-# table-level metadata that survives EVERY routine commit
-# (table.commit_delta's carry list): constraints keep enforcing,
-# a clone's origin stays releasable, MV lineage and the IVF quantizer
-# ride until their owners override them
-_CARRY_ALWAYS = ("constraints", "cloned_from", "mv_of", "quantizer")
-_CARRY_APPEND = ("deletes", "renames", "dropped_cols", "index_of",
-                 "cluster_curve", "stream_batches", *_CARRY_ALWAYS)
-
-
-def _append_doc(cur: dict, v: int, new_files: list[str], stats: dict,
-                sizes: dict, stat_cols: list[str], schema_json: dict,
-                table_path: str | None = None) -> tuple[dict, list[str]]:
-    """Pure-append next-version doc (plus any chunk files written for
-    it): carry EVERY current file (the ``update_key_ranges={}`` rule —
-    an append makes no claim about rows it didn't read, so concurrent
-    commits never conflict); deletes target only pre-existing files
-    and renames self-limit by birth version, so both carry verbatim.
-    A CHUNKED (v2) table appends by carrying every chunk entry by
-    reference and packing the new files into fresh chunk files —
-    per-commit metadata write cost stays O(new files), exactly
-    ``table._build_layout``'s contract."""
-    if "chunks" in cur:
-        from prox_spark.table import CHUNK_SIZE
-
-        entries, written = _write_chunks_py(
-            table_path, new_files, stats, dict.fromkeys(new_files, v),
-            sizes, stat_cols, CHUNK_SIZE,
-        )
-        raw_entries = [
-            {k: e[k] for k in ("file", "n", "ranges") if k in e}
-            for e in cur["chunks"]
-        ]
-        doc = {
-            "version": v,
-            "chunks": [*raw_entries, *entries],
-            "stat_cols": stat_cols,
-            "schema": schema_json,
-        }
-        for k in _CARRY_APPEND:
-            if cur.get(k):
-                doc[k] = cur[k]
-        return doc, written
-    keep = list(cur.get("files") or [])
-    cur_stats = cur.get("stats") or {}
-    cur_born = cur.get("born") or {}
-    cur_sizes = cur.get("sizes") or {}
-    doc = {
-        "version": v,
-        "files": [*keep, *new_files],
-        "stats": {
-            **{f: cur_stats.get(f) for f in keep},
-            **{f: stats.get(f) for f in new_files},
-        },
-        "stat_cols": stat_cols,
-        "schema": schema_json,
-        "born": {
-            **{f: cur_born.get(f, 0) for f in keep},
-            **dict.fromkeys(new_files, v),
-        },
-        "sizes": {
-            **{f: cur_sizes[f] for f in keep if f in cur_sizes},
-            **sizes,
-        },
-    }
-    for k in _CARRY_APPEND:
-        if cur.get(k):
-            doc[k] = cur[k]
-    return doc, []
-
-
-def _publish_cas(table_path: str, doc: dict, v: int) -> bool:
-    """Atomic manifest publish: tmp write + ``os.link`` (fails on an
-    existing target) — the CAS primitive ``table._write_manifest``
-    implements via Hadoop rename."""
-    import uuid
-
-    mdir = os.path.join(_local(table_path), MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh)
-    final = os.path.join(mdir, f"manifest-{v:08d}.json")
-    try:
-        os.link(tmp, final)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-
-
 class _ProxWriteCore:
     """Shared write machinery for the batch and streaming writers —
-    option/preflight resolution and the per-task Arrow→parquet encode
-    (Spark requires distinct writer base classes per mode, so the
+    option/preflight resolution, the per-task Arrow→parquet encode and
+    the CAS commit (Spark requires distinct writer base classes per mode, so the
     shared logic lives in this mixin)."""
 
     _MAX_CAS_RETRIES = 10
 
     def __init__(self, options, schema: StructType, overwrite: bool):
-        import uuid
-
         path = options.get("path")
         if not path:
             raise ValueError("prox_table requires .save(<table path>)")
-        self.table_path = _local(path)
+        self.table_path = mf.local_path(path)
         self.overwrite = bool(overwrite)
         self.schema_struct = schema
         self.schema_json = schema.jsonValue()
         self.rel_dir = f"data/snap-00000000-{uuid.uuid4().hex[:8]}"
-        try:
-            prev = manifest_py(path)
-        except ValueError:
-            prev = None
+        prev = self._current()
         self.prev_version = int(prev["version"]) if prev else 0
         if prev is not None:
             if not self.overwrite:
@@ -886,12 +531,10 @@ class _ProxWriteCore:
         workspace staging area — pure-python tmp-write + rename (the
         commit worker has no SparkSession), unique filename so racing
         writers never collide."""
-        import uuid
-
         if not self.txn_workspace:
             return
         sdir = os.path.join(
-            _local(self.txn_workspace), TXN_STAGING_DIR,
+            mf.local_path(self.txn_workspace), TXN_STAGING_DIR,
             str(self.txn_stage),
         )
         os.makedirs(sdir, exist_ok=True)
@@ -904,10 +547,104 @@ class _ProxWriteCore:
             sdir, f"pin-{uuid.uuid4().hex}.json"
         ))
 
+    def _current(self) -> dict | None:
+        try:
+            return mf.load_manifest(self.table_path)
+        except ValueError:
+            return None
+
+    def _unlink(self, rels) -> None:
+        for rel in rels:
+            try:
+                os.unlink(os.path.join(self.table_path, rel))
+            except FileNotFoundError:
+                pass
+
+    def _write_json(self, rel: str, doc: dict) -> None:
+        path = os.path.join(self.table_path, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as fh:
+            json.dump(doc, fh)
+
+    def _next_doc(self, cur: dict | None, v: int, new_files: list[str],
+                  sizes: dict, stats: dict) -> tuple[dict, list[str]]:
+        """Version ``v``'s doc, plus the chunk files written for it. An
+        overwrite (or a table's first commit) is a full snapshot; an
+        append carries EVERY current file (the
+        ``update_key_ranges={}`` rule — an append makes no claim about
+        rows it didn't read, so concurrent commits never conflict).
+        The layout is ``table.commit_delta``'s: a chunked table carries
+        its chunk entries by reference and packs only the new files
+        into fresh chunk files, so per-commit metadata write cost stays
+        O(new files)."""
+        # the layout thresholds live with the JVM writer: one setting
+        # governs both writers
+        from prox_spark.table import CHUNK_SIZE, CHUNK_THRESHOLD
+
+        append = cur is not None and not self.overwrite
+        base = cur if append else {}
+        keep = list(base.get("files") or [])
+        all_stats, born, all_sizes = mf.file_meta(
+            base, keep, new_files, stats, sizes, v
+        )
+        layout, written = mf.next_layout(
+            base, keep, new_files, all_stats, self.stat_cols,
+            self._write_json, threshold=CHUNK_THRESHOLD,
+            chunk_size=CHUNK_SIZE, born=born, sizes=all_sizes,
+        )
+        doc = {
+            "version": v,
+            **layout,
+            "stat_cols": self.stat_cols,
+            "schema": self.schema_json,
+        }
+        # an overwrite clears renames/deletes/dropped_cols — no old
+        # file remains for them to apply to
+        return mf.carry(cur, doc, mf.APPEND_CARRY if append else
+                        mf.CARRY_FORWARD), written
+
+    def _commit(self, messages, batch_id: int | None = None) -> int | None:
+        """Publish the next version with the SAME atomic-CAS protocol as
+        ``table.commit_delta``: tmp-write + ``manifest.link_publish``,
+        rebuild against the winner's manifest on a lost race. Returns
+        the published version — or None when ``batch_id`` (a streaming
+        micro-batch) was already applied by this writer, in which case
+        its files are dropped."""
+        new_files, sizes, stats = _gather_messages(messages)
+        self.enforce_constraints(new_files)
+        for _ in range(self._MAX_CAS_RETRIES):
+            cur = self._current()
+            applied = (cur or {}).get("stream_batches") or {}
+            if batch_id is not None and int(
+                applied.get(self.writer_id, -1)
+            ) >= batch_id:
+                # replayed batch: already folded — exactly-once means
+                # dropping the rewrite, never appending it twice
+                self._unlink(new_files)
+                return None
+            v = (int(cur["version"]) if cur else 0) + 1
+            doc, written = self._next_doc(cur, v, new_files, sizes, stats)
+            if batch_id is not None:
+                # the fence and the data publish in ONE manifest rename
+                # — no crash window where one landed without the other
+                doc["stream_batches"] = {**applied, self.writer_id: batch_id}
+            tmp = f"{mf.MANIFEST_DIR}/.tmp-{uuid.uuid4().hex}.json"
+            self._write_json(tmp, doc)
+            if mf.link_publish(
+                os.path.join(self.table_path, tmp),
+                os.path.join(self.table_path, mf.manifest_file(v)),
+            ):
+                return v
+            # lost the race: this attempt's chunk files carry a stale
+            # born version — drop them and rebuild
+            self._unlink(written)
+        raise OSError(
+            f"commit to {self.table_path} lost the publish race "
+            f"{self._MAX_CAS_RETRIES} times"
+        )
+
     # -- executor side ------------------------------------------------
     def write(self, iterator):
-        import uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -952,11 +689,7 @@ class _ProxWriteCore:
         format's constraints use; an expression DuckDB cannot parse
         fails LOUDLY rather than publishing unvalidated bytes). A
         violation removes the written files and raises the counts."""
-        try:
-            cur = manifest_py(self.table_path)
-        except ValueError:
-            return
-        constraints = cur.get("constraints") or []
+        constraints = (self._current() or {}).get("constraints") or []
         if not constraints or not new_files:
             return
         import duckdb
@@ -975,11 +708,7 @@ class _ProxWriteCore:
             names = list(exprs)
             counts = dict(zip(names, row))
         except Exception as ex:
-            for f in new_files:
-                try:
-                    os.unlink(os.path.join(self.table_path, f))
-                except FileNotFoundError:
-                    pass
+            self._unlink(new_files)
             raise ValueError(
                 f"{self.table_path} declares CHECK constraints this "
                 f"writer could not validate ({type(ex).__name__}: {ex}); "
@@ -987,11 +716,7 @@ class _ProxWriteCore:
             ) from ex
         bad = {n: int(v) for n, v in counts.items() if v}
         if bad:
-            for f in new_files:
-                try:
-                    os.unlink(os.path.join(self.table_path, f))
-                except FileNotFoundError:
-                    pass
+            self._unlink(new_files)
             raise ValueError(
                 f"commit to {self.table_path} violates CHECK "
                 "constraint(s) "
@@ -1008,8 +733,8 @@ class ProxTableArrowWriter(_ProxWriteCore, DataSourceArrowWriter):
     dir (sorted by the leading stat columns so footer min/max stay
     tight for pruning), and ``commit`` publishes the next manifest
     version with the SAME atomic-CAS protocol as
-    ``table.commit_delta`` — tmp-write + ``os.link`` (fails on an
-    existing target), rebase and retry on a lost race; pure appends
+    ``table.commit_delta`` — tmp-write + ``manifest.link_publish``
+    (fails on an existing target), rebase and retry on a lost race; pure appends
     carry every current file plus the previous version's
     deletes/renames verbatim (new files are born at v, so no mapping
     applies to them), overwrite publishes a full snapshot. Per-file
@@ -1023,46 +748,7 @@ class ProxTableArrowWriter(_ProxWriteCore, DataSourceArrowWriter):
     constraints, schema evolution on append."""
 
     def commit(self, messages):
-        new_files, sizes, stats = _gather_messages(messages)
-        self.enforce_constraints(new_files)
-        for _ in range(self._MAX_CAS_RETRIES):
-            try:
-                cur = manifest_py(self.table_path)
-            except ValueError:
-                cur = None
-            v = (int(cur["version"]) if cur else 0) + 1
-            chunk_orphans: list[str] = []
-            if self.overwrite or cur is None:
-                doc = _snapshot_doc(v, new_files, stats, sizes,
-                                    self.stat_cols, self.schema_json)
-                # table-level metadata survives a full rewrite too
-                # (commit_delta carries these unconditionally):
-                # constraints keep enforcing, a clone's origin stays
-                # releasable; renames/deletes/dropped_cols clear — no
-                # old file remains for them to apply to
-                for k in _CARRY_ALWAYS:
-                    if cur and cur.get(k):
-                        doc[k] = cur[k]
-            else:
-                doc, chunk_orphans = _append_doc(
-                    cur, v, new_files, stats, sizes,
-                    self.stat_cols, self.schema_json, self.table_path,
-                )
-            if _publish_cas(self.table_path, doc, v):
-                self.record_txn_stage(v)
-                return
-            # lost the race: drop this attempt's chunk files (their
-            # recorded born version is stale) and rebuild against the
-            # winner's manifest
-            for rel in chunk_orphans:
-                try:
-                    os.unlink(os.path.join(self.table_path, rel))
-                except FileNotFoundError:
-                    pass
-        raise OSError(
-            f"commit to {self.table_path} lost the publish race "
-            f"{self._MAX_CAS_RETRIES} times"
-        )
+        self.record_txn_stage(self._commit(messages))
 
     def abort(self, messages):
         self.abort_cleanup()
@@ -1095,59 +781,11 @@ class ProxTableStreamWriter(_ProxWriteCore, DataSourceStreamArrowWriter):
                 "writes)"
             )
 
-    def _drop_batch_files(self, messages) -> None:
-        new_files, _, _ = _gather_messages(messages)
-        for rel in new_files:
-            try:
-                os.unlink(os.path.join(self.table_path, rel))
-            except FileNotFoundError:
-                pass
-
     def commit(self, messages, batchId: int):  # noqa: N803 — Spark API
-        new_files, sizes, stats = _gather_messages(messages)
-        self.enforce_constraints(new_files)
-        for _ in range(self._MAX_CAS_RETRIES):
-            try:
-                cur = manifest_py(self.table_path)
-            except ValueError:
-                cur = None
-            applied = (cur or {}).get("stream_batches") or {}
-            if self.writer_id in applied and int(
-                applied[self.writer_id]
-            ) >= int(batchId):
-                # replayed batch: already folded — exactly-once means
-                # dropping the rewrite, never appending it twice
-                self._drop_batch_files(messages)
-                return
-            v = (int(cur["version"]) if cur else 0) + 1
-            chunk_orphans: list[str] = []
-            if cur is None:
-                doc = _snapshot_doc(v, new_files, stats, sizes,
-                                    self.stat_cols, self.schema_json)
-            else:
-                doc, chunk_orphans = _append_doc(
-                    cur, v, new_files, stats, sizes,
-                    self.stat_cols, self.schema_json, self.table_path,
-                )
-            # the fence and the data publish in ONE manifest rename —
-            # no crash window where one landed without the other
-            doc["stream_batches"] = {
-                **applied, self.writer_id: int(batchId),
-            }
-            if _publish_cas(self.table_path, doc, v):
-                return
-            for rel in chunk_orphans:
-                try:
-                    os.unlink(os.path.join(self.table_path, rel))
-                except FileNotFoundError:
-                    pass
-        raise OSError(
-            f"stream commit to {self.table_path} lost the publish race "
-            f"{self._MAX_CAS_RETRIES} times"
-        )
+        self._commit(messages, int(batchId))
 
     def abort(self, messages, batchId: int):  # noqa: N803 — Spark API
-        self._drop_batch_files(messages)
+        self._unlink(_gather_messages(messages)[0])
 
 
 class ProxTableChangesBatchReader(DataSourceReader):
@@ -1165,14 +803,11 @@ class ProxTableChangesBatchReader(DataSourceReader):
     rather than silently mis-stating the delta."""
 
     def __init__(self, schema: StructType, options: dict):
-        from prox_spark.table_stream import (
-            TableChangesStreamReader,
-            _list_versions,
-        )
+        from prox_spark.table_stream import TableChangesStreamReader
 
         opts = {k.lower(): v for k, v in options.items()}
         path = opts["path"]
-        versions = _list_versions(path)
+        versions = mf.list_versions(path)
         if not versions:
             raise ValueError(f"{path} is not a manifest table")
         self._start = int(opts.get("startingversion", 0))
@@ -1234,15 +869,14 @@ class ProxTableDataSource(DataSource):
                         "prox_table: tags pin main versions — tag and "
                         "ref are exclusive"
                     )
-                v = tag_version_py(path, tag)
+                v = mf.tag_version(path, tag)
             if ts is not None:
                 # TIMESTAMP AS OF (Delta parity): resolve against the
                 # manifests' publish times, same clock as
                 # table.version_at_timestamp
-                v = version_at_timestamp_py(path, float(ts), ref)
-            self._manifest = manifest_py(
-                path, int(v) if v is not None else None, ref
-            )
+                v = mf.version_at_timestamp(path, float(ts), ref)
+            v = mf.pick_version(mf.list_versions(path, ref), v, path, ref)
+            self._manifest = mf.load_manifest(path, v, ref)
             self._path = path
         return self._manifest, self._path
 

@@ -28,19 +28,17 @@ Semantics (matching Delta's streaming source):
 
 Scale notes: offset resolution is O(new manifests) of driver-side
 metadata IO per trigger; each micro-batch reads only the files the
-new versions added (work ∝ commit volume, never table size); file
-listing and JSON reads go through ``pyarrow.fs`` resolved from the
-table URI, so the same code paths work on local FS and object
-stores. Chunked (v2) manifests resolve through their chunk files —
-but only the chunks a new commit WROTE need reading in steady state
-(the born-map diff is what the partitions need).
+new versions added (work ∝ commit volume, never table size). Manifest
+listing, reads and chunk assembly go through the ``pyarrow.fs`` reader
+of ``prox_spark/manifest.py`` (the format module ``table.py`` shares),
+resolved from the table URI, so the same code paths work on local FS
+and object stores.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -49,8 +47,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-MANIFEST_DIR = "_manifests"
-_MANIFEST_RE = re.compile(r"^manifest-(\d{8})\.json$")
+from prox_spark import manifest as mf
 
 # the change-feed column contract — same names as the batch reader
 # (prox_spark/cdf.py), duplicated rather than imported: this module
@@ -58,65 +55,6 @@ _MANIFEST_RE = re.compile(r"^manifest-(\d{8})\.json$")
 # driver-side table/cdf machinery in
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
-
-
-def _fs_base(path: str):
-    """(pyarrow FileSystem, base path) for a table URI — LocalFileSystem
-    for plain/``file:`` paths, the scheme's FS otherwise."""
-    from pyarrow import fs as pafs
-
-    if path.startswith("file:"):
-        path = path[len("file:"):]
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
-
-def _entry_path(base: str, entry: str) -> str:
-    """Resolve a manifest file entry: relative entries join the table
-    base; a shallow clone's foreign (absolute/URI) entries pass
-    through — the pure-python twin of table._abs."""
-    if entry.startswith("/") or "://" in entry:
-        return entry
-    return f"{base}/{entry}"
-
-def _list_versions(path: str) -> list[int]:
-    from pyarrow import fs as pafs
-
-    fs, base = _fs_base(path)
-    sel = pafs.FileSelector(f"{base}/{MANIFEST_DIR}", allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        m = _MANIFEST_RE.match(os.path.basename(info.path))
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _read_json(path: str, rel: str) -> dict:
-    fs, base = _fs_base(path)
-    with fs.open_input_file(f"{base}/{rel}") as f:
-        return json.loads(f.read().decode("utf-8"))
-
-
-def _load_manifest(path: str, v: int) -> dict:
-    """Manifest ``v`` with files/born ASSEMBLED from chunk files when
-    chunked — the pure-python twin of table.read_manifest (no Spark
-    session exists where the stream reader runs)."""
-    doc = _read_json(path, f"{MANIFEST_DIR}/manifest-{v:08d}.json")
-    if "chunks" not in doc:
-        return doc
-    files: list[str] = []
-    born: dict = {}
-    for entry in doc["chunks"]:
-        chunk = _read_json(path, entry["file"])
-        files.extend(chunk["files"])
-        born.update(chunk.get("born") or {})
-    out = dict(doc)
-    out["files"] = files
-    out["born"] = born
-    return out
 
 
 def _checkpoint_committed_offset(checkpoint: str) -> int | None:
@@ -129,7 +67,7 @@ def _checkpoint_committed_offset(checkpoint: str) -> int | None:
     the data-source worker process and on object stores."""
     from pyarrow import fs as pafs
 
-    fs, base = _fs_base(checkpoint)
+    fs, base = mf.filesystem(checkpoint)
     sel = pafs.FileSelector(f"{base}/commits", allow_not_found=True)
     batches = [
         int(os.path.basename(info.path))
@@ -198,7 +136,7 @@ def _entries_for(
     """The merge-on-read delete entries of manifest ``man`` that
     target file ``f``, as (resolved key-file path, keys) pairs."""
     return [
-        (_entry_path(base, d["file"]), list(d["keys"]))
+        (mf.local_entry(base, d["file"]), list(d["keys"]))
         for d in (man.get("deletes") or [])
         if f in set(d["targets"])
     ]
@@ -307,9 +245,9 @@ class TableChangesStreamReader(DataSourceStreamReader):
         # compaction retires them, which also rewrites the old files).
         self._evolution_guards: set[str] = set()
         if self._allow_evolution:
-            versions = _list_versions(self._path)
+            versions = mf.list_versions(self._path)
             if versions:
-                head = _load_manifest(self._path, versions[-1])
+                head = mf.load_manifest(self._path, versions[-1])
                 pinned_names = {
                     f.name for f in schema.fields
                 }
@@ -339,7 +277,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
             self._last_end = v
 
     def latestOffset(self) -> dict:
-        versions = _list_versions(self._path)
+        versions = mf.list_versions(self._path)
         latest = versions[-1] if versions else self._start_v
         # pace only once a floor is known: on the FIRST trigger after a
         # (re)start self._last_end is None and the true floor lives in
@@ -374,7 +312,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
         """Manifest ``v``, or None when it was vacuumed and
         ``failOnDataLoss=false`` opted into skipping the gap."""
         try:
-            return _load_manifest(self._path, v)
+            return mf.load_manifest(self._path, v)
         except FileNotFoundError as ex:
             if self._fail_on_data_loss:
                 raise RuntimeError(
@@ -397,7 +335,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         s, e = int(start["version"]), int(end["version"])
         self._advance_floor(e)
-        _, base = _fs_base(self._path)
+        _, base = mf.filesystem(self._path)
         parts: list[InputPartition] = []
         # a SHALLOW CLONE's history begins at src_version+1, so offsets
         # below its first manifest never existed — distinguish that
@@ -405,9 +343,9 @@ class TableChangesStreamReader(DataSourceStreamReader):
         # genesis snapshot, Delta's clone-stream behavior) from a
         # genuinely vacuumed gap, which must keep raising data-loss
         clone_base = None
-        versions = _list_versions(self._path)
+        versions = mf.list_versions(self._path)
         if versions and s < versions[0]:
-            first_doc = _load_manifest(self._path, versions[0])
+            first_doc = mf.load_manifest(self._path, versions[0])
             if first_doc.get("cloned_from"):
                 s = versions[0] - 1
                 clone_base = versions[0]
@@ -466,7 +404,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
                     for f in cur_files:
                         parts.append(
                             _FilesPartition(
-                                [_entry_path(base, f)],
+                                [mf.local_entry(base, f)],
                                 list(self._fields),
                                 anti=_entries_for(doc, f, base),
                             )
@@ -476,7 +414,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
                     if fresh:
                         parts.append(
                             _FilesPartition(
-                                [_entry_path(base, f) for f in fresh],
+                                [mf.local_entry(base, f) for f in fresh],
                                 list(self._fields),
                             )
                         )
@@ -574,7 +512,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
             _guard_renames(doc, f)
             parts.append(
                 _ChangePartition(
-                    [_entry_path(base, f)], fields, "insert", v,
+                    [mf.local_entry(base, f)], fields, "insert", v,
                     anti=_entries_for(doc, f, base),
                 )
             )
@@ -584,7 +522,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
                     _guard_renames(prev, f)
                     parts.append(
                         _ChangePartition(
-                            [_entry_path(base, f)], fields, "delete", v,
+                            [mf.local_entry(base, f)], fields, "delete", v,
                             anti=_entries_for(prev, f, base),
                         )
                     )
@@ -600,10 +538,10 @@ class TableChangesStreamReader(DataSourceStreamReader):
                         _guard_renames(prev, f)
                         parts.append(
                             _ChangePartition(
-                                [_entry_path(base, f)], fields, "delete", v,
+                                [mf.local_entry(base, f)], fields, "delete", v,
                                 anti=_entries_for(prev, f, base),
                                 semi=(
-                                    _entry_path(base, entry["file"]),
+                                    mf.local_entry(base, entry["file"]),
                                     list(entry["keys"]),
                                 ),
                             )
@@ -703,12 +641,12 @@ class TableChangesDataSource(DataSource):
         return "prox_table_changes"
 
     def schema(self):
-        versions = _list_versions(self.options["path"])
+        versions = mf.list_versions(self.options["path"])
         if not versions:
             raise ValueError(
                 f"{self.options['path']} is not a manifest table"
             )
-        doc = _load_manifest(self.options["path"], versions[-1])
+        doc = mf.load_manifest(self.options["path"], versions[-1])
         if "schema" not in doc:
             raise ValueError(
                 "manifest records no schema (legacy table); pass an "

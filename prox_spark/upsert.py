@@ -245,6 +245,17 @@ def _collect_capped(df: DataFrame, cap: int = _KEY_SET_CAP) -> list | None:
     return rows
 
 
+def _key_values(rows, keys: list[str]) -> tuple[dict, dict | None]:
+    """The key scope of a batch's distinct key ``rows``: per key column
+    the SORTED distinct non-null values (the input of the key-set
+    admission test, :func:`prox_spark.manifest.admits_keys`) and the
+    per-column ``(lo, hi)`` range — the commit's conflict scope for
+    optimistic concurrency, None when every value is null."""
+    vals = {k: sorted({r[k] for r in rows if r[k] is not None}) for k in keys}
+    ranges = {k: (v[0], v[-1]) for k, v in vals.items() if v}
+    return vals, ranges or None
+
+
 def _prune_files(manifest: dict, key_df: DataFrame, keys: list[str],
                  key_rows: list | None = None, force_ranges: bool = False):
     """(touched_files, keep_files, key_ranges) for the merge: exact
@@ -263,37 +274,30 @@ def _prune_files(manifest: dict, key_df: DataFrame, keys: list[str],
     from prox_spark.table import split_files_by_key_ranges, split_files_by_key_sets
 
     files = manifest.get("files", [])
-    if key_rows is not None:
-        vals = {
-            k: sorted({r[k] for r in key_rows if r[k] is not None})
-            for k in keys
-        }
-        ranges = {k: (v[0], v[-1]) for k, v in vals.items() if v}
+    if key_rows is None:
         if len(files) <= 2:
-            return list(files), [], (ranges or None)
-        touched, keep = split_files_by_key_sets(manifest, vals)
-        return touched, keep, (ranges or None)
+            # nothing worth pruning: skip the key-collect job entirely
+            # (small tables — e.g. AQE-coalesced dimensions — hit this
+            # on every merge of a sequential pipeline)
+            return list(files), [], None
+        # force_ranges: the caller already proved the key set exceeds
+        # the cap — don't re-run the identical distinct-collect just
+        # to re-learn it
+        if not force_ranges:
+            rows = (
+                key_df.select(*keys).distinct()
+                .limit(_KEY_SET_CAP + 1).collect()
+            )
+            if len(rows) <= _KEY_SET_CAP:
+                key_rows = rows
+        if key_rows is None:
+            ranges = _key_ranges(key_df, keys)
+            touched, keep = split_files_by_key_ranges(manifest, ranges)
+            return touched, keep, ranges
+    vals, ranges = _key_values(key_rows, keys)
     if len(files) <= 2:
-        # nothing worth pruning: skip the key-collect job entirely
-        # (small tables — e.g. AQE-coalesced dimensions — hit this on
-        # every merge of a sequential pipeline)
-        return list(files), [], None
-    if force_ranges:
-        # caller already proved the key set exceeds the cap — don't
-        # re-run the identical distinct-collect just to re-learn it
-        ranges = _key_ranges(key_df, keys)
-        touched, keep = split_files_by_key_ranges(manifest, ranges)
-        return touched, keep, ranges
-    rows = key_df.select(*keys).distinct().limit(_KEY_SET_CAP + 1).collect()
-    if len(rows) <= _KEY_SET_CAP:
-        vals = {
-            k: sorted({r[k] for r in rows if r[k] is not None}) for k in keys
-        }
-        ranges = {k: (v[0], v[-1]) for k, v in vals.items() if v}
-        touched, keep = split_files_by_key_sets(manifest, vals)
-        return touched, keep, (ranges or None)
-    ranges = _key_ranges(key_df, keys)
-    touched, keep = split_files_by_key_ranges(manifest, ranges)
+        return list(files), [], ranges
+    touched, keep = split_files_by_key_sets(manifest, vals)
     return touched, keep, ranges
 
 
@@ -403,11 +407,7 @@ def _merge_scope(
                     # distinct-collect job
                     over_cap = True
             if key_rows is not None:
-                vals = {
-                    k: sorted({r[k] for r in key_rows if r[k] is not None})
-                    for k in keys
-                }
-                ranges = {k: (v[0], v[-1]) for k, v in vals.items() if v}
+                vals, ranges = _key_values(key_rows, keys)
                 overlap, disjoint = split_chunks_by_key_sets(doc, vals)
                 partial = _assemble(
                     spark, table_path, {**doc, "chunks": overlap}
@@ -420,7 +420,7 @@ def _merge_scope(
                 )
                 return _MergeScope(
                     spark, table_path, keys, touched, keep_loose, False,
-                    stat_cols, base_v, ranges or None,
+                    stat_cols, base_v, ranges,
                     carry_chunks=disjoint, base_manifest=partial,
                 )
         manifest = _assemble(spark, table_path, doc)
@@ -546,14 +546,7 @@ def delete_keys_mor(
     # prune AND gives commit_delete_file's CAS the key scope it needs
     # to prove concurrently-added files disjoint on a lost race
     key_rows = _collect_capped(dset)
-    key_vals = (
-        {
-            k: sorted({r[k] for r in key_rows if r[k] is not None})
-            for k in keys
-        }
-        if key_rows is not None
-        else None
-    )
+    key_vals = _key_values(key_rows, keys)[0] if key_rows is not None else None
     if set(keys) <= set(manifest.get("stat_cols") or []):
         targets, _, _ = _prune_files(manifest, dset, keys, key_rows)
     else:

@@ -68,6 +68,24 @@ def test_clone_reads_equal_source_and_copies_nothing(spark):
     assert tags.get(tag) == m["cloned_from"]["version"]
 
 
+def test_clone_from_file_uri_source(spark):
+    """A ``file:`` source URI is a foreign location like an absolute
+    path: the clone references the source's files through the URI
+    (never a cwd-relative ``file:`` path), reads equal the source, and
+    the pin lands on — and releases from — the source."""
+    s = _scratch()
+    src, dst = f"{s}/src", f"{s}/dst"
+    _seed(spark, src)
+    clone_table(spark, f"file:{src}", dst)
+    m = read_manifest(spark, dst)
+    assert all(f.startswith(f"file:{src}/") for f in m["files"])
+    assert _rows(read_table(spark, dst)) == _rows(read_table(spark, src))
+    tag = m["cloned_from"]["tag"]
+    assert list_tags(spark, src).get(tag) == m["cloned_from"]["version"]
+    assert release_clone_pin(spark, dst)
+    assert tag not in list_tags(spark, src)
+
+
 def test_clone_divergence_is_two_way_isolated(spark):
     s = _scratch()
     src, dst = f"{s}/src", f"{s}/dst"

@@ -750,7 +750,8 @@ def test_statless_file_is_always_a_rewrite_candidate(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from prox_spark.table import _footer_stats, _overlaps
+    from prox_spark.manifest import admits_range
+    from prox_spark.table import _footer_stats
 
     f = str(tmp_path / "nostats.parquet")
     pq.write_table(
@@ -760,13 +761,13 @@ def test_statless_file_is_always_a_rewrite_candidate(spark, tmp_path):
     )
     stats = _footer_stats(f, ["id"])
     assert stats is not None and stats["id"] is None
-    assert _overlaps(stats, {"id": (500, 600)})  # unknown -> touched
+    assert admits_range(stats, {"id": (500, 600)})  # unknown -> touched
 
     with_stats = str(tmp_path / "stats.parquet")
     pq.write_table(pa.table({"id": list(range(100))}), with_stats)
     s2 = _footer_stats(with_stats, ["id"])
     assert s2["id"] == [0, 99]
-    assert not _overlaps(s2, {"id": (500, 600)})
+    assert not admits_range(s2, {"id": (500, 600)})
 
 
 def test_table_history_reports_versions_files_and_deletes(spark, tmp_path):

@@ -13,13 +13,15 @@ import pytest
 from pyspark.sql import functions as F
 
 import prox_spark.table as T
+from prox_spark.manifest import load_manifest
 from prox_spark.table import (
     commit_delta,
     commit_snapshot,
     compact_table,
+    create_branch,
     read_manifest,
 )
-from prox_spark.table_stream import TableChangesDataSource, _load_manifest
+from prox_spark.table_stream import TableChangesDataSource
 
 
 @pytest.fixture()
@@ -150,22 +152,41 @@ def test_schema_change_mid_stream_raises(registered, tmp_path):
 
 
 def test_loader_assembles_chunked_manifests(spark, tmp_path, monkeypatch):
-    """The stream reader's pure-python manifest loader must resolve
-    chunked (v2) snapshots exactly like table.read_manifest — files
-    and born maps assembled from the chunk files."""
-    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 4)
+    """The pyarrow.fs manifest reader the stream and format() workers
+    use (prox_spark.manifest.load_manifest) must resolve every layout
+    exactly like table.read_manifest — files, stats, born and sizes —
+    over a flat and a chunked (v2) table, on main and on a branch.
+    The cases share one test id; each is labelled in its assertion."""
+    monkeypatch.setattr(T, "CHUNK_THRESHOLD", 6)
     monkeypatch.setattr(T, "CHUNK_SIZE", 2)
-    t = str(tmp_path / "t")
-    commit_snapshot(spark, t, _docs(spark, 0, 40), stat_cols=["doc_id"], n_files=6)
-    prev = read_manifest(spark, t)
-    commit_delta(
-        spark, t, _docs(spark, 40, 42), list(prev["files"]), update_key_ranges={}
-    )
-    want = read_manifest(spark, t)
-    assert "chunks" in want  # the layout under test
-    got = _load_manifest(t, int(want["version"]))
-    assert sorted(got["files"]) == sorted(want["files"])
-    assert got["born"] == want.get("born")
+    for layout, n_files in (("flat", 1), ("chunked", 8)):
+        t = str(tmp_path / layout)
+        commit_snapshot(
+            spark, t, _docs(spark, 0, 40), stat_cols=["doc_id"], n_files=n_files
+        )
+        prev = read_manifest(spark, t)
+        commit_delta(
+            spark, t, _docs(spark, 40, 42), list(prev["files"]),
+            update_key_ranges={},
+        )
+        create_branch(spark, t, "audit")
+        head = read_manifest(spark, t, ref="audit")
+        commit_delta(
+            spark, t, _docs(spark, 42, 44), list(head["files"]),
+            update_key_ranges={}, ref="audit",
+        )
+        for ref in ("main", "audit"):
+            case = f"{layout}/{ref}"
+            want = read_manifest(spark, t, ref=ref)
+            # the layout under test
+            assert ("chunks" in want) == (layout == "chunked"), case
+            got = load_manifest(t, ref=ref)
+            assert got["version"] == want["version"], case
+            assert got["files"] == want["files"], case
+            assert got["stats"] == want["stats"], case
+            assert got.get("born") == want.get("born"), case
+            assert got.get("sizes") == want.get("sizes"), case
+            assert got.get("born") and got.get("sizes"), case
 
 
 def test_view_merge_batch_replay_is_idempotent(spark, tmp_path):
